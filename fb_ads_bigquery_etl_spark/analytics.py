@@ -8,6 +8,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from fb_ads_bigquery_etl_spark import storage
+
 
 def dedup_ctas(df: DataFrame) -> DataFrame:
     """Q1: SELECT DISTINCT * (README.md:383-385)."""
@@ -125,10 +127,7 @@ def incremental_rollup(
         overwrite_partitions(rolled, rollup_path, partition_col="month")
     finally:
         rolled.unpersist()
-    from fb_ads_bigquery_etl_spark.sinks import _hadoop_fs
-
+    fs = storage.of(spark, rollup_path)
     for m in sorted(set(months) - present):
-        fs, jpath, _ = _hadoop_fs(spark, rollup_path.rstrip("/") + f"/month={m}")
-        if fs.exists(jpath):
-            fs.delete(jpath, True)
+        fs.delete(rollup_path.rstrip("/") + f"/month={m}")
     return months

@@ -31,10 +31,9 @@ No reference counterpart (north-star extension, BASELINE.json).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window, functions as F
 
+from fb_ads_bigquery_etl_spark import storage
 from fb_ads_bigquery_etl_spark.session import (
     coalesce_metadata_stages,
     local_df,
@@ -624,100 +623,43 @@ def _residuals(
     return cents, resid
 
 
-def _write_sidecar_parquet_local(dirpath: str, table) -> None:
-    """Overwrite a LOCAL metadata sidecar dir with one pyarrow-written
-    parquet file (temp name + atomic rename — a crash never leaves a
-    torn file a later fast-path read would trip on). Caller has already
-    checked _local_fs_dir. Spark reads the result like any parquet
-    dir."""
-    import shutil
-    import uuid
+_CENTROID_SCHEMA = "centroid_id bigint, cvec array<double>, cnorm double"
+_CODEBOOK_SCHEMA = "m int, c int, cw array<long>"
 
-    import pyarrow.parquet as papq
 
-    if os.path.isdir(dirpath):
-        shutil.rmtree(dirpath)
-    os.makedirs(dirpath, exist_ok=True)
-    final = os.path.join(dirpath, f"part-{uuid.uuid4().hex}.parquet")
-    tmp = f"{final}.tmp"
-    papq.write_table(table, tmp)
-    os.rename(tmp, final)
+def _write_sidecar(spark, dirpath: str, rows: list, ddl: str) -> None:
+    """Overwrite a metadata sidecar dir with one driver-written parquet
+    file (storage.py owns the filesystem and the encoding; no job)."""
+    fs = storage.of(spark, dirpath)
+    fs.delete(dirpath)
+    fs.write_rows(f"{dirpath}/{storage.new_file_name('part')}", rows, ddl)
 
 
 def _write_centroid_sidecar(spark, cents: DataFrame, dirpath: str) -> None:
-    """Overwrite the centroid sidecar — driver-side pyarrow on a local
-    store (the table is nlist-sized metadata; a Spark write job only
-    added fixed latency per build/publish — r14), Spark write
-    elsewhere. Values round-trip exactly: the collect returns the
-    computed doubles."""
-    base = _local_fs_dir(dirpath)
-    if base is not None:
-        import pyarrow as pa
-
-        rows = cents.select("centroid_id", "cvec", "cnorm").collect()
-        table = pa.Table.from_arrays(
-            [
-                pa.array(
-                    [int(r["centroid_id"]) for r in rows], type=pa.int64()
-                ),
-                pa.array(
-                    [[float(x) for x in r["cvec"]] for r in rows],
-                    type=pa.list_(pa.float64()),
-                ),
-                pa.array(
-                    [float(r["cnorm"]) for r in rows], type=pa.float64()
-                ),
-            ],
-            names=["centroid_id", "cvec", "cnorm"],
-        )
-        _write_sidecar_parquet_local(base, table)
-        return
-    cents.write.mode("overwrite").parquet(dirpath)
+    """Overwrite the centroid sidecar. Values round-trip exactly: the
+    collect returns the computed doubles."""
+    rows = [
+        (int(r["centroid_id"]), [float(x) for x in r["cvec"]],
+         float(r["cnorm"]))
+        for r in cents.select("centroid_id", "cvec", "cnorm").collect()
+    ]
+    _write_sidecar(spark, dirpath, rows, _CENTROID_SCHEMA)
 
 
-def _write_codebook_sidecar(spark, cb_rows: list, dirpath: str) -> None:
-    """Overwrite the codebook sidecar from driver-side (m, c, cw) rows —
-    pyarrow on a local store (zero jobs — r14), Spark write elsewhere."""
-    base = _local_fs_dir(dirpath)
-    if base is not None:
-        import pyarrow as pa
-
-        table = pa.Table.from_arrays(
-            [
-                pa.array([r[0] for r in cb_rows], type=pa.int32()),
-                pa.array([r[1] for r in cb_rows], type=pa.int32()),
-                pa.array(
-                    [[int(x) for x in r[2]] for r in cb_rows],
-                    type=pa.list_(pa.int64()),
-                ),
-            ],
-            names=["m", "c", "cw"],
-        )
-        _write_sidecar_parquet_local(base, table)
-        return
-    local_df(spark, cb_rows, "m int, c int, cw array<long>").write.mode(
-        "overwrite"
-    ).parquet(dirpath)
-
-
-def _read_sidecar_rows(spark, dirpath: str) -> list[dict]:
-    """Collect a metadata-sized sidecar table (centroids, codebooks):
-    driver-side pyarrow on a local store (no job — r14), Spark read +
-    collect elsewhere. Raises if the sidecar is missing, matching the
-    Spark read's AnalysisException contract."""
-    base = _local_fs_dir(dirpath)
-    if base is not None:
-        rows = _read_parquet_rows_local(base)
-        if rows is not None:
-            return rows
-    return [r.asDict() for r in spark.read.parquet(dirpath).collect()]
+def _read_sidecar_rows(spark, dirpath: str, ddl: str) -> list[dict]:
+    """Collect a metadata-sized sidecar table (centroids, codebooks) on
+    the driver. Raises FileNotFoundError if the sidecar is missing."""
+    rows = storage.of(spark, dirpath).read_rows(dirpath, ddl)
+    if rows is None:
+        raise FileNotFoundError(f"missing index sidecar: {dirpath}")
+    return rows
 
 
 def load_codebooks(spark, path: str) -> list[list[list[int]]]:
     """Read the codebook sidecar back into the list[m][ksub][sub_dim]
-    shape every PQ kernel consumes — a metadata-sized collect (m*ksub
-    rows; pure driver work on a local store)."""
-    cb_rows = _read_sidecar_rows(spark, f"{path}_codebooks")
+    shape every PQ kernel consumes — m*ksub rows, read on the
+    driver."""
+    cb_rows = _read_sidecar_rows(spark, f"{path}_codebooks", _CODEBOOK_SCHEMA)
     m = 1 + max(r["m"] for r in cb_rows)
     ksub = 1 + max(r["c"] for r in cb_rows)
     cb: list[list[list[int] | None]] = [[None] * ksub for _ in range(m)]
@@ -770,11 +712,10 @@ def build_ivfpq_index(
     # a full rebuild supersedes any interrupted split: clear its
     # staged commit so the fresh index is not gated on recovery
     spark = df.sparkSession
-    fs, P = _split_fs(spark, path)
+    fs = storage.of(spark, path)
     staged_p, scents_p, commit_p = _split_paths(path)
     for leftover in (staged_p, scents_p, commit_p, f"{commit_p}_tmp"):
-        if fs.exists(P(leftover)):
-            fs.delete(P(leftover), True)
+        fs.delete(leftover)
     cents, resid = _residuals(
         df, centroids, vec_col=vec_col, id_col=id_col
     )
@@ -804,20 +745,9 @@ def build_ivfpq_index(
             # partition on disk (dynamic replaces only partitions
             # present in the new write), resurrecting retired codes
             # after a retrain migration.
-            prev = codes.sparkSession.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            codes.sparkSession.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            try:
-                codes.repartition("bucket").write.mode(
-                    "overwrite"
-                ).partitionBy("bucket").parquet(path)
-            finally:
-                codes.sparkSession.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
+            codes.repartition("bucket").write.mode("overwrite").option(
+                "partitionOverwriteMode", "static"
+            ).partitionBy("bucket").parquet(path)
         finally:
             codes.unpersist()
     finally:
@@ -829,7 +759,7 @@ def build_ivfpq_index(
         for mm, cb_m in enumerate(cb)
         for c, cw in enumerate(cb_m)
     ]
-    _write_codebook_sidecar(spark, cb_rows, f"{path}_codebooks")
+    _write_sidecar(spark, f"{path}_codebooks", cb_rows, _CODEBOOK_SCHEMA)
     # per-file stats sidecar: a fresh seq=0 snapshot from the write-
     # time stats (reset: the overwrite above retired every prior file)
     refresh_ivfpq_manifest(spark, path, precomputed=pre, reset=True)
@@ -987,21 +917,14 @@ def _split_paths(path: str) -> tuple[str, str, str]:
     )
 
 
-def _split_fs(spark, path: str):
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    P = jvm.org.apache.hadoop.fs.Path
-    return P(path).getFileSystem(hconf), P
-
-
 def _check_no_split_inflight(spark, path: str) -> None:
     """Refuse to read or mutate an index whose bucket split crashed
     mid-commit: between the code-bucket swap and the centroid-sidecar
     swap the pair is mutually inconsistent (duplicate or unreachable
     probe results), so the commit marker gates EVERY public verb until
     the staged commit is rolled forward."""
-    fs, P = _split_fs(spark, path)
-    if fs.exists(P(_split_paths(path)[2])):
+    commit = _split_paths(path)[2]
+    if storage.of(spark, commit).exists(commit):
         raise ValueError(
             f"interrupted bucket split/merge on {path}: a staged "
             "commit is in flight — run recover_ivfpq_split(spark, "
@@ -1020,42 +943,31 @@ def _replay_split_commit(spark, path: str) -> dict | None:
     disappears exactly when its swap lands). Returns the precomputed
     stats, or None when no commit is in flight."""
     staged, staged_cents, commit = _split_paths(path)
-    fs, P = _split_fs(spark, path)
-    if not fs.exists(P(commit)):
+    fs = storage.of(spark, path)
+    rows = fs.read_rows(commit, _SPLIT_COMMIT_SCHEMA)
+    if rows is None:
         return None
-    rows = spark.read.schema(_SPLIT_COMMIT_SCHEMA).parquet(commit).collect()
+    # a failed rename raises (storage.py) and leaves the marker in
+    # place, so a retry / recover_ivfpq_split replays the commit
     pre: dict[int, tuple[int, int, int]] = {}
     for r in rows:
         b = int(r["bucket"])
-        live = P(f"{path}/bucket={b}")
+        live = f"{path}/bucket={b}"
         if r["op"] == "commit":
             pre[b] = (int(r["n_rows"]), int(r["min_id"]), int(r["max_id"]))
-            src_dir = P(f"{staged}/bucket={b}")
+            src_dir = f"{staged}/bucket={b}"
             if fs.exists(src_dir):
-                if fs.exists(live):
-                    fs.delete(live, True)
-                _rename_or_raise(fs, src_dir, live)
-        elif fs.exists(live):
-            fs.delete(live, True)
-    scents, lcents = P(staged_cents), P(f"{path}_centroids")
-    if fs.exists(scents):
-        if fs.exists(lcents):
-            fs.delete(lcents, True)
-        _rename_or_raise(fs, scents, lcents)
+                fs.delete(live)
+                fs.rename(src_dir, live)
+        else:
+            fs.delete(live)
+    if fs.exists(staged_cents):
+        fs.delete(f"{path}_centroids")
+        fs.rename(staged_cents, f"{path}_centroids")
     refresh_ivfpq_manifest(spark, path, precomputed=pre)
-    fs.delete(P(commit), True)
-    fs.delete(P(staged), True)
+    fs.delete(commit)
+    fs.delete(staged)
     return pre
-
-
-def _rename_or_raise(fs, src, dst) -> None:
-    """Hadoop FileSystem.rename signals failure by RETURNING FALSE
-    (dst exists, missing parent, cross-FS move), not by raising — an
-    unchecked call would let a publish report success with nothing
-    swapped. The marker stays in place on failure, so a retry /
-    recover_ivfpq_split replays the commit."""
-    if not fs.rename(src, dst):
-        raise IOError(f"filesystem rename failed: {src} -> {dst}")
 
 
 def recover_ivfpq_split(spark, path: str) -> bool:
@@ -1120,8 +1032,8 @@ def split_ivfpq_bucket(
     deleted id still in `src` would resurrect into a child bucket.
     compact_ivfpq_index first. Single-writer, like every other index
     mutation. A vacated partition dir (the parent always; a donor
-    bucket emptied by strays in theory) is deleted through the
-    Hadoop FS API, and the manifest refresh records the drops.
+    bucket emptied by strays in theory) is deleted on the driver
+    (storage.py), and the manifest refresh records the drops.
 
     Crash-consistent publish: the rewritten buckets and the grown
     centroid table are STAGED, a commit marker lands, and only then do
@@ -1158,9 +1070,9 @@ def split_ivfpq_bucket(
             raise ValueError("empty index: nothing to split")
         bucket = int(hot["bucket"])
     # the rebuild below overwrites the centroid sidecar this reads —
-    # collected to a local frame (metadata-sized; pure driver work on
-    # a local store, and no max-agg job: the max is a Python max, r14)
-    crows = _read_sidecar_rows(spark, f"{path}_centroids")
+    # collected to a local frame (metadata-sized, read on the driver;
+    # no max-agg job: the max is a Python max)
+    crows = _read_sidecar_rows(spark, f"{path}_centroids", _CENTROID_SCHEMA)
     cents = local_df(
         spark,
         [
@@ -1301,10 +1213,9 @@ def _reassign_and_publish(
     # finished by recover_ivfpq_split — the code buckets and the
     # centroid table can never be read as a mismatched pair.
     staged, staged_cents, commit = _split_paths(path)
-    fs, P = _split_fs(spark, path)
+    fs = storage.of(spark, path)
     for stale in (staged, staged_cents, f"{commit}_tmp"):
-        if fs.exists(P(stale)):
-            fs.delete(P(stale), True)
+        fs.delete(stale)
     out.write.mode("overwrite").partitionBy("bucket").parquet(staged)
     _write_centroid_sidecar(spark, new_cents, staged_cents)
     plan = [
@@ -1312,22 +1223,21 @@ def _reassign_and_publish(
                 ("drop", None, None, None))
         for b in touched
     ]
-    # the marker's EXISTENCE is the commit point, but the parquet job
-    # that writes it is not atomic (a crash mid-job leaves the dir
-    # with no data files — recovery would read an EMPTY plan and swap
-    # centroids without the bucket swaps). Write the plan to a temp
-    # dir and FS-RENAME it into place: the marker path exists iff the
-    # plan inside it is complete.
-    rdd = spark.sparkContext.parallelize(plan, 1)  # single-slice: see
-    spark.createDataFrame(rdd, _SPLIT_COMMIT_SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(f"{commit}_tmp")  # _write_manifest_segment's tiny-write note
-    # the commit point: checked rename (Hadoop signals failure by
-    # returning false). NOTE: directory rename is atomic on HDFS and
-    # local FS; on rename-as-copy object stores (S3A) this commit
-    # protocol needs the store's own committer — same caveat class as
-    # every rename-based Spark output committer.
-    _rename_or_raise(fs, P(f"{commit}_tmp"), P(commit))
+    # the marker's EXISTENCE is the commit point, and a write into its
+    # final dir is not atomic (a crash mid-write would leave a dir with
+    # no plan — recovery would swap centroids without the bucket
+    # swaps). Write the plan into a temp dir and rename the dir into
+    # place: the marker path exists iff the plan inside it is complete.
+    # NOTE: directory rename is atomic on HDFS and local FS; on
+    # rename-as-copy object stores (S3A) this commit protocol needs the
+    # store's own committer — same caveat class as every rename-based
+    # Spark output committer.
+    fs.write_rows(
+        f"{commit}_tmp/{storage.new_file_name('part')}",
+        plan,
+        _SPLIT_COMMIT_SCHEMA,
+    )
+    fs.rename(f"{commit}_tmp", commit)
     _replay_split_commit(spark, path)
     return touched, n_moved
 
@@ -1385,11 +1295,11 @@ def merge_ivfpq_buckets(
             "(moved rows re-encode from the caller's corpus and would "
             "bypass logical deletes)"
         )
-    # collected to a local frame (metadata-sized; pure driver work on
-    # a local store — r14): the cold pick, the known-id check and the
+    # collected to a local frame (metadata-sized, read on the
+    # driver): the cold pick, the known-id check and the
     # parent retirement all read it without touching the files the
     # publish below replaces
-    crows = _read_sidecar_rows(spark, f"{path}_centroids")
+    crows = _read_sidecar_rows(spark, f"{path}_centroids", _CENTROID_SCHEMA)
     cents = local_df(
         spark,
         [
@@ -1477,107 +1387,24 @@ def merge_ivfpq_buckets(
     }
 
 
-def _local_fs_dir(path: str) -> str | None:
-    """The plain local-filesystem directory behind `path` when it IS
-    local (bare path or file: URI), else None. Gate for the driver-side
-    metadata fast paths below: sidecar/manifest reads and writes are
-    METADATA-SIZED BY CONSTRUCTION (nlist buckets, per-file stats,
-    m*ksub codebook rows), so on a local store they are pure driver
-    work — scheduling a Spark job per listing/read/write only added
-    fixed job latency to every maintenance verb (guide §5: the driver
-    should do no DATA work; this is not data). Non-local stores keep
-    the JVM-side implementations unchanged."""
-    if "://" in path:
-        return None
-    if path.startswith("file:"):
-        return path[len("file:"):]
-    return path
-
-
-def _read_parquet_rows_local(dirpath: str) -> list[dict] | None:
-    """Driver-side read of a LOCAL metadata-sized parquet dir via
-    pyarrow: list of row dicts, or None when the dir doesn't exist
-    (mirroring the AnalysisException contract of the Spark read).
-    Missing columns across files (legacy segments) read as None."""
-    import pyarrow.parquet as papq
-
-    if not os.path.isdir(dirpath):
-        return None
-    rows: list[dict] = []
-    for name in sorted(os.listdir(dirpath)):
-        if name.startswith(("_", ".")) or not name.endswith(".parquet"):
-            continue
-        table = papq.read_table(os.path.join(dirpath, name))
-        rows.extend(table.to_pylist())
-    return rows
-
-
 def _list_code_files(spark, path: str) -> list[tuple[str, str, int, int]]:
     """Listing of the index's bucket-partitioned code files —
-    (full_path, 'bucket=X/name' suffix, size, mtime) per file. On a
-    local store the walk is one os.scandir pass on the driver (no job
-    at all — r14); elsewhere it runs JVM-SIDE through the binaryFile
-    source with only the metadata columns selected (content is never
-    read), so the cost is one small job + a file-count collect instead
-    of ~8 py4j round trips per file (measured: 2.9 s -> ~0.2 s at 473
-    files). The suffix (NOT the basename) is the file's identity:
-    streaming publishes deterministic b<id>-<seq> names whose seq
-    resets PER BUCKET DIR, so basenames alone can collide across
-    buckets."""
-    base = _local_fs_dir(path)
-    if base is not None:
-        out = []
-        if os.path.isdir(base):
-            for bdir in os.listdir(base):
-                if not bdir.startswith("bucket="):
-                    continue
-                d = os.path.join(base, bdir)
-                if not os.path.isdir(d):
-                    continue
-                with os.scandir(d) as it:
-                    for e in it:
-                        if e.name.startswith(("_", ".")) or not e.is_file():
-                            continue
-                        st = e.stat()
-                        out.append(
-                            (
-                                e.path,
-                                f"{bdir}/{e.name}",
-                                int(st.st_size),
-                                # Hadoop's LocalFileStatus mtime is
-                                # java.io.File.lastModified() — whole
-                                # milliseconds; integer ns floor-div
-                                # reproduces it exactly
-                                st.st_mtime_ns // 1_000_000,
-                            )
-                        )
-        return sorted(out, key=lambda t: t[1])
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = (
-            spark.read.format("binaryFile")
-            .load(f"{path}/bucket=*")
-            .select("path", "length", "modificationTime")
-            .collect()
-        )
-    except AnalysisException:  # no bucket= dirs yet
-        return []
+    (full_path, 'bucket=X/name' suffix, size, mtime) per file, one
+    driver-side listing per bucket dir (storage.py; no job). The
+    suffix (NOT the basename) is the file's identity: streaming
+    publishes deterministic b<id>-<seq> names whose seq resets PER
+    BUCKET DIR, so basenames alone can collide across buckets."""
+    fs = storage.of(spark, path)
     out = []
-    for r in rows:
-        full = r["path"]
-        parts = full.rsplit("/", 2)
-        name, parent = parts[-1], parts[-2]
-        if name.startswith(("_", ".")) or not parent.startswith("bucket="):
+    for d in fs.list(path):
+        if not (d.is_dir and d.name.startswith("bucket=")):
             continue
-        out.append(
-            (
-                full,
-                f"{parent}/{name}",
-                int(r["length"]),
-                int(r["modificationTime"].timestamp() * 1000),
-            )
-        )
+        for e in fs.list(f"{path}/{d.name}"):
+            if not e.is_dir:
+                out.append(
+                    (f"{path}/{d.name}/{e.name}", f"{d.name}/{e.name}",
+                     e.size, e.mtime)
+                )
     return sorted(out, key=lambda t: t[1])
 
 
@@ -1588,58 +1415,23 @@ _MANIFEST_SCHEMA = (
 _MANIFEST_SEG_SCHEMA = _MANIFEST_SCHEMA + ", seq long, op string"
 
 
-def _read_ivfpq_manifest_segments(spark, path: str) -> DataFrame | None:
-    """Raw read of the manifest sidecar's append-only SEGMENTS (every
-    refresh appends one small file of (seq, op) rows; op is 'add' or
-    'drop'). Legacy pre-segment sidecars (plain 8-column snapshots)
-    read as one seq=0 all-'add' segment, so an index written by an
-    older build keeps working in place. Returns None if no sidecar."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        # explicit schema instead of mergeSchema: no footer-merge job,
-        # and legacy files simply read their missing seq/op as NULL
-        raw = spark.read.schema(_MANIFEST_SEG_SCHEMA).parquet(
-            f"{path}_manifest"
-        )
-    except AnalysisException:
-        return None
-    return raw.select(
-        "file", "suffix", "size", "mtime", "bucket",
-        "n_rows", "min_id", "max_id",
-        F.coalesce(F.col("seq"), F.lit(0)).cast("long").alias("seq"),
-        F.coalesce(F.col("op"), F.lit("add")).alias("op"),
-    )
-
-
 def _read_manifest_segment_rows(spark, path: str) -> list[dict] | None:
-    """Raw manifest segment rows as driver-side dicts — the refresh /
-    fold hot path. LOCAL store: one pyarrow read on the driver (no
-    Spark job); otherwise the JVM-side segment read + collect. Legacy
-    rows (no seq/op columns) normalize to seq=0 / op='add' exactly as
-    the DataFrame reader does. None = no sidecar."""
-    base = _local_fs_dir(f"{path}_manifest")
-    if base is not None:
-        raw = _read_parquet_rows_local(base)
-        if raw is None:
-            return None
-        return [
-            {
-                "file": r.get("file"),
-                "suffix": r.get("suffix"),
-                "size": r.get("size"),
-                "mtime": r.get("mtime"),
-                "bucket": r.get("bucket"),
-                "n_rows": r.get("n_rows"),
-                "min_id": r.get("min_id"),
-                "max_id": r.get("max_id"),
-                "seq": r["seq"] if r.get("seq") is not None else 0,
-                "op": r["op"] if r.get("op") is not None else "add",
-            }
-            for r in raw
-        ]
-    seg = _read_ivfpq_manifest_segments(spark, path)
-    return None if seg is None else [r.asDict() for r in seg.collect()]
+    """Raw rows of the manifest sidecar's append-only SEGMENTS (every
+    refresh appends one small file of (seq, op) rows; op is 'add' or
+    'drop') as driver-side dicts. Legacy pre-segment sidecars (plain
+    8-column snapshots, no seq/op) read as one seq=0 all-'add' segment,
+    so an index written by an older build keeps working in place.
+    None = no sidecar."""
+    man = f"{path}_manifest"
+    raw = storage.of(spark, man).read_rows(man, _MANIFEST_SEG_SCHEMA)
+    if raw is None:
+        return None
+    for r in raw:
+        if r["seq"] is None:
+            r["seq"] = 0
+        if r["op"] is None:
+            r["op"] = "add"
+    return raw
 
 
 def _manifest_row8(r) -> tuple:
@@ -1668,31 +1460,17 @@ def _read_ivfpq_manifest(spark, path: str) -> DataFrame | None:
     """Live view of the per-file stats sidecar (`<path>_manifest`) if
     one exists, else None: segments reconciled to one row per live
     file in the original 8-column schema, so every consumer (stats,
-    compaction, envelope pruning, the gates) is segment-agnostic.
-    LOCAL store: read + reconcile on the driver (the fold is
-    metadata-sized by construction), returned as a one-slice local
-    frame — no scan job, no window shuffle (r14)."""
-    if _local_fs_dir(path) is not None:
-        rows = _read_manifest_segment_rows(spark, path)
-        if rows is None:
-            return None
-        live = _reconcile_manifest_rows(rows)
-        return local_df(
-            spark,
-            [_manifest_row8(live[s]) for s in sorted(live)],
-            _MANIFEST_SCHEMA,
-        )
-    seg = _read_ivfpq_manifest_segments(spark, path)
-    if seg is None:
+    compaction, envelope pruning, the gates) is segment-agnostic. The
+    read and the fold run on the driver (metadata-sized by
+    construction); the result is a one-slice local frame."""
+    rows = _read_manifest_segment_rows(spark, path)
+    if rows is None:
         return None
-    w = Window.partitionBy("suffix").orderBy(F.col("seq").desc())
-    return (
-        seg.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & (F.col("op") == "add"))
-        .select(
-            "file", "suffix", "size", "mtime", "bucket",
-            "n_rows", "min_id", "max_id",
-        )
+    live = _reconcile_manifest_rows(rows)
+    return local_df(
+        spark,
+        [_manifest_row8(live[s]) for s in sorted(live)],
+        _MANIFEST_SCHEMA,
     )
 
 
@@ -1717,102 +1495,35 @@ def _bucket_stats(codes: DataFrame) -> dict[int, tuple[int, int, int]]:
 
 
 def _scan_code_file_stats(spark, path: str, files: list[str]) -> dict:
-    """Stat code files by READING them — the crash-self-heal fallback
-    only (a writer died between data publish and manifest refresh, or
-    files appeared out-of-band); the normal write path passes
-    precomputed stats and never lands here. Returns {suffix: (n_rows,
-    min_id, max_id)}; callers backfill (0, None, None) for zero-row
-    files the grouped scan cannot see."""
-    if all(_local_fs_dir(f) is not None for f in files):
-        # self-heal fallback over a handful of LOCAL files: pyarrow
-        # column reads on the driver (the files are delete-bounded by
-        # construction; no job needed — r14)
-        import pyarrow.parquet as papq
-
-        out = {}
-        for f in files:
-            ids = papq.read_table(
-                _local_fs_dir(f), columns=["id"]
-            ).column("id").to_pylist()
-            suffix = "/".join(f.rsplit("/", 2)[-2:])
-            out[suffix] = (
-                len(ids),
-                min(ids) if ids else None,
-                max(ids) if ids else None,
-            )
-        return out
-    grouped = (
-        spark.read.option("basePath", path)
-        .parquet(*files)
-        .groupBy(F.input_file_name().alias("file"))
-        .agg(
-            F.count("*").cast("long").alias("n_rows"),
-            F.min("id").cast("long").alias("min_id"),
-            F.max("id").cast("long").alias("max_id"),
+    """Stat code files by READING their id column on the driver — the
+    crash-self-heal fallback only (a writer died between data publish
+    and manifest refresh, or files appeared out-of-band); the normal
+    write path passes precomputed stats and never lands here. Returns
+    {suffix: (n_rows, min_id, max_id)} for every file, zero-row files
+    as (0, None, None)."""
+    fs = storage.of(spark, path)
+    out = {}
+    for f in files:
+        ids = [r["id"] for r in fs.read_rows(f, "id long")]
+        out["/".join(f.rsplit("/", 2)[-2:])] = (
+            len(ids),
+            min(ids) if ids else None,
+            max(ids) if ids else None,
         )
-        .collect()
-    )
-    return {
-        "/".join(r["file"].rsplit("/", 2)[-2:]): (
-            int(r["n_rows"]), r["min_id"], r["max_id"],
-        )
-        for r in grouped
-    }
+    return out
 
 
 def _write_manifest_segment(spark, rows: list, path: str, mode: str) -> None:
-    """Write one manifest segment as a SINGLE file from driver-side
-    rows. LOCAL store: a pyarrow write on the driver (temp file +
-    atomic rename, so a crash never leaves a torn segment; r14 — the
-    rows are metadata-sized, a Spark write job only added fixed
-    latency per refresh). Otherwise deliberately parallelize(rows, 1):
-    coalesce(1) over a default-parallelism local collection stalls on
-    locality scheduling (measured 5.5 s vs 0.3 s for a 16-row segment
-    on local[32]) — one slice is the right plan, not a merge of 32
-    empty ones."""
-    base = _local_fs_dir(f"{path}_manifest")
-    if base is not None:
-        import shutil
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as papq
-
-        schema = pa.schema(
-            [
-                ("file", pa.string()),
-                ("suffix", pa.string()),
-                ("size", pa.int64()),
-                ("mtime", pa.int64()),
-                ("bucket", pa.int32()),
-                ("n_rows", pa.int64()),
-                ("min_id", pa.int64()),
-                ("max_id", pa.int64()),
-                ("seq", pa.int64()),
-                ("op", pa.string()),
-            ]
-        )
-        cols = (
-            [list(c) for c in zip(*[tuple(r) for r in rows])]
-            if rows
-            else [[] for _ in schema]
-        )
-        table = pa.Table.from_arrays(
-            [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
-            schema=schema,
-        )
-        if mode == "overwrite" and os.path.isdir(base):
-            shutil.rmtree(base)
-        os.makedirs(base, exist_ok=True)
-        final = os.path.join(base, f"seg-{uuid.uuid4().hex}.parquet")
-        tmp = f"{final}.tmp"
-        papq.write_table(table, tmp)
-        os.rename(tmp, final)
-        return
-    rdd = spark.sparkContext.parallelize([tuple(r) for r in rows], 1)
-    spark.createDataFrame(rdd, _MANIFEST_SEG_SCHEMA).write.mode(
-        mode
-    ).parquet(f"{path}_manifest")
+    """Write one manifest segment as a SINGLE driver-written file
+    (storage.py): `mode` 'overwrite' replaces every prior segment,
+    'append' adds one."""
+    man = f"{path}_manifest"
+    fs = storage.of(spark, man)
+    if mode == "overwrite":
+        fs.delete(man)
+    fs.write_rows(
+        f"{man}/{storage.new_file_name('seg')}", rows, _MANIFEST_SEG_SCHEMA
+    )
 
 
 @coalesce_metadata_stages
@@ -1939,41 +1650,18 @@ def compact_ivfpq_manifest(
     an append-only/streaming workload that never compacts the INDEX
     still gets its sidecar folded; safe standalone under the same
     single-writer contract."""
-    base = _local_fs_dir(f"{path}_manifest")
-    if base is not None:
-        # driver-side fold: count, reconcile and rewrite without a
-        # single Spark job (metadata-sized by construction — r14)
-        if not os.path.isdir(base):
-            return 0
-        n_seg = sum(
-            1
-            for n in os.listdir(base)
-            if n.endswith(".parquet") and not n.startswith(("_", "."))
-        )
-        if n_seg <= max_segments:
-            return 0
-        live = _reconcile_manifest_rows(
-            _read_manifest_segment_rows(spark, path) or []
-        )
-        rows = [
-            _manifest_row8(live[s]) + (0, "add") for s in sorted(live)
-        ]
-        _write_manifest_segment(spark, rows, path, "overwrite")
-        return int(n_seg)
-    from pyspark.errors import AnalysisException
-
-    try:
-        n_seg = (
-            spark.read.format("binaryFile")
-            .load(f"{path}_manifest/*.parquet")
-            .count()
-        )
-    except AnalysisException:
-        return 0
+    man = f"{path}_manifest"
+    n_seg = sum(
+        1
+        for e in storage.of(spark, man).list(man)
+        if e.name.endswith(".parquet")
+    )
     if n_seg <= max_segments:
         return 0
-    man = _read_ivfpq_manifest(spark, path)
-    rows = [tuple(r) + (0, "add") for r in man.collect()]  # metadata
+    live = _reconcile_manifest_rows(
+        _read_manifest_segment_rows(spark, path) or []
+    )
+    rows = [_manifest_row8(live[s]) + (0, "add") for s in sorted(live)]
     _write_manifest_segment(spark, rows, path, "overwrite")
     return int(n_seg)
 
@@ -2022,21 +1710,14 @@ def _read_tombstones(spark, path: str) -> DataFrame | None:
     `id long`) if one exists, else None. The returned frame stays a
     Spark read (the pending-delete set is not metadata-sized in
     general — it feeds distributed joins), but the ABSENT probe is a
-    plain os.path check on a local store (r14: the AnalysisException
-    the reader raises for a missing path is a py4j exception round
-    trip with a serialized JVM stack — measured in the 0.1 s class,
-    and this probe runs per maintenance verb AND per probe query/
-    micro-batch). Non-local paths keep the reader probe (a single
-    namenode/list call either way)."""
-    from pyspark.errors import AnalysisException
-
-    base = _local_fs_dir(f"{path}_tombstones")
-    if base is not None and not os.path.isdir(base):
+    driver-side existence check (storage.py) — the reader's
+    AnalysisException for a missing path is a py4j exception round trip
+    with a serialized JVM stack, and this probe runs per maintenance
+    verb AND per probe query/micro-batch."""
+    tomb = f"{path}_tombstones"
+    if not storage.of(spark, tomb).exists(tomb):
         return None
-    try:
-        return spark.read.schema("id long").parquet(f"{path}_tombstones")
-    except AnalysisException:
-        return None
+    return spark.read.schema("id long").parquet(tomb)
 
 
 @coalesce_metadata_stages
@@ -2105,9 +1786,8 @@ def compact_ivfpq_index(
     materialize-before-overwrite is a localCheckpoint: correct here
     (the rewrite must not read the files it replaces), but its blocks
     live on executors — on a real cluster an executor loss
-    mid-compaction aborts the job (clean: the conf is restored in
-    `finally` and a retry starts over; stage to a temp dir instead if
-    that retry cost ever matters).
+    mid-compaction aborts the job (clean: a retry starts over; stage
+    to a temp dir instead if that retry cost ever matters).
 
     Probe-equality before/after is exact: the anti-join the probe did
     against the sidecar is the same filter compaction bakes into the
@@ -2207,14 +1887,9 @@ def compact_ivfpq_index(
     # the agg re-reads executor blocks, not files)
     pre = _bucket_stats(live)
 
-    prev = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        live.write.mode("overwrite").partitionBy("bucket").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    live.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("bucket").parquet(path)
 
     if man is not None:
         # the refresh folds piled-up manifest segments itself
@@ -2360,7 +2035,7 @@ def query_ivfpq_index(
     )
     from pyspark.sql import Window  # noqa: F401  (parity with siblings)
 
-    cents = _read_sidecar_rows(spark, f"{path}_centroids")
+    cents = _read_sidecar_rows(spark, f"{path}_centroids", _CENTROID_SCHEMA)
     cb = load_codebooks(spark, path)
     m = len(cb)
     sub = len(cb[0][0])
@@ -2462,7 +2137,7 @@ def query_ivfpq_index_batch(
         cosine_similarity,
     )
 
-    cents = _read_sidecar_rows(spark, f"{path}_centroids")
+    cents = _read_sidecar_rows(spark, f"{path}_centroids", _CENTROID_SCHEMA)
     cb = load_codebooks(spark, path)
     m = len(cb)
     sub = len(cb[0][0])

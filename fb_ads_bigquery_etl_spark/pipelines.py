@@ -174,8 +174,6 @@ def run_streaming(
         # T8 empty short-circuit, streaming flavor: every batch was
         # empty, nothing was ever written — report, don't crash
         return RunReport("success", "streaming drain ingested 0 rows", 0)
-    # engine-aware read: under Delta a raw parquet read would count
-    # superseded files the _delta_log has tombstoned
     n = read_table(spark, table_path).count()
     return RunReport("success", f"table at {n} rows after streaming drain", n)
 
@@ -229,8 +227,8 @@ def resolve_latest_file(
     backfill artifact by reverse filename sort — filenames embed the date
     range, so lexicographic order IS recency order.
 
-    Globbing goes through the Hadoop FileSystem API so the artifact
-    directory can live on any supported store, not just local disk.
+    Globbing goes through storage.py so the artifact directory can live
+    on any supported store, not just local disk.
     """
     from fb_ads_bigquery_etl_spark.sinks import glob_files
 
@@ -311,8 +309,8 @@ def maintain_table(
     )
 
     key = list(key or DEDUP_KEY)
-    # Partition discovery through the Hadoop FS abstraction (not local
-    # os.listdir): maintenance must run against object-store tables.
+    # Partition discovery through storage.py (not local os.listdir):
+    # maintenance must run against object-store tables.
     parts = list_partition_values(spark, table_path)
     files_after = {
         p: compact_partition(

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from fb_ads_bigquery_etl_spark import storage
 from fb_ads_bigquery_etl_spark.schema import (
     DEDUP_KEY,
     PARTITION_COLUMN,
@@ -19,47 +20,28 @@ from fb_ads_bigquery_etl_spark.schema import (
 )
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path, jvm) for `path` via the session's Hadoop conf —
-    the store-agnostic way to list/glob (local, HDFS, s3a, gs all work)."""
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, jpath, jvm
-
-
 def list_partition_values(
     spark: SparkSession, table_path: str, *, partition_col: str = PARTITION_COLUMN
 ) -> list[str]:
-    """Hive-partition discovery through the Hadoop FileSystem API.
-
-    Replaces local-FS `os.listdir`: at 100 TB the table lives on an
-    object store, and partition discovery must go through the session's
-    filesystem abstraction, not the driver's local disk.
-    """
-    fs, jpath, _ = _hadoop_fs(spark, table_path)
+    """Hive-partition discovery on whatever filesystem the table lives
+    on (storage.py): at 100 TB the table lives on an object store, not
+    the driver's local disk."""
     prefix = f"{partition_col}="
-    vals = [
-        st.getPath().getName()[len(prefix):]
-        for st in fs.listStatus(jpath)
-        if st.isDirectory() and st.getPath().getName().startswith(prefix)
-    ]
-    return sorted(vals)
+    return sorted(
+        e.name[len(prefix):]
+        for e in storage.of(spark, table_path).list(table_path)
+        if e.is_dir and e.name.startswith(prefix)
+    )
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:
-    """Store-agnostic existence check via the Hadoop FileSystem API."""
-    fs, jpath, _ = _hadoop_fs(spark, path)
-    return fs.exists(jpath)
+    """Store-agnostic existence check (storage.py)."""
+    return storage.of(spark, path).exists(path)
 
 
 def glob_files(spark: SparkSession, pattern: str) -> list[str]:
-    """Store-agnostic glob (Hadoop `globStatus`), full URIs, sorted."""
-    fs, _, jvm = _hadoop_fs(spark, pattern)
-    statuses = fs.globStatus(jvm.org.apache.hadoop.fs.Path(pattern))
-    if statuses is None:
-        return []
-    return sorted(st.getPath().toString() for st in statuses)
+    """Store-agnostic glob (storage.py), full paths, sorted."""
+    return storage.of(spark, pattern).glob(pattern)
 
 
 def write_partitioned(
@@ -133,76 +115,8 @@ def write_bucketed(
     writer.saveAsTable(table_name, format="parquet")
 
 
-def delta_available(spark: SparkSession) -> bool:
-    """True when the delta-spark package AND its SQL extension are live
-    in this session (both are required for MERGE INTO; the pip package
-    alone is not enough if the session was built without the Delta
-    catalog/extension configs)."""
-    try:
-        from delta.tables import DeltaTable  # noqa: F401
-    except ImportError:
-        return False
-    ext = spark.conf.get("spark.sql.extensions", "") or ""
-    return "DeltaSparkSessionExtension" in ext
-
-
-def merge_upsert_delta(
-    spark: SparkSession,
-    updates: DataFrame,
-    path: str,
-    key: tuple[str, ...] = DEDUP_KEY,
-) -> DataFrame:
-    """True row-level MERGE via Delta Lake: matched keys update, new
-    keys insert — transactional, no partition rewrite, concurrent-reader
-    safe. Requires `delta_available`; `merge_upsert` dispatches here
-    automatically when it is.
-
-    The ON clause includes the partition column (part of DEDUP_KEY), so
-    Delta's file-pruning bounds the rewrite to affected partitions —
-    the same bounded-IO contract as the parquet fallback, minus the
-    read-modify-write of whole partitions.
-    """
-    from delta.tables import DeltaTable
-
-    if not DeltaTable.isDeltaTable(spark, path):
-        updates.write.format("delta").partitionBy(PARTITION_COLUMN).save(path)
-        return spark.read.format("delta").load(path)
-    tgt = DeltaTable.forPath(spark, path)
-    cond = " AND ".join(f"t.`{c}` <=> s.`{c}`" for c in key)
-    # whenMatchedUpdateAll/whenNotMatchedInsertAll only evolve the target
-    # schema when Delta's autoMerge conf is on; without it an `updates`
-    # frame carrying new columns raises instead of evolving — which would
-    # break the schema-evolving contract the parquet fallback (and
-    # run_streaming's docstring) promise. Scope it to this merge.
-    AUTOMERGE = "spark.databricks.delta.schema.autoMerge.enabled"
-    prev = spark.conf.get(AUTOMERGE, None)
-    spark.conf.set(AUTOMERGE, "true")
-    try:
-        (
-            tgt.alias("t")
-            .merge(updates.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(AUTOMERGE)
-        else:
-            spark.conf.set(AUTOMERGE, prev)
-    return spark.read.format("delta").load(path)
-
-
 def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Engine-aware table read: Delta when the path is a Delta table in
-    a Delta-capable session (a plain parquet read there would scan
-    superseded data files the _delta_log has tombstoned), parquet
-    otherwise."""
-    if delta_available(spark):
-        from delta.tables import DeltaTable
-
-        if DeltaTable.isDeltaTable(spark, path):
-            return spark.read.format("delta").load(path)
+    """Table read for the merge_upsert sink's parquet tables."""
     # mergeSchema: partition-overwrite MERGE leaves older partitions
     # with narrower files after schema evolution; a single-footer
     # inference would drop the newer columns
@@ -214,28 +128,12 @@ def merge_upsert(
     updates: DataFrame,
     path: str,
     key: tuple[str, ...] = DEDUP_KEY,
-    engine: str = "auto",
 ) -> DataFrame:
     """Idempotent key-based MERGE (fixes EP3's duplicate-on-reload gap,
-    SURVEY.md §3).
-
-    engine='auto' probes for Delta (`delta_available`) and issues a real
-    row-level MERGE INTO when present; otherwise (plain parquet — this
-    container) it falls back to a partition-overwrite MERGE: only
-    partitions present in `updates` are rewritten (updates win over
-    existing rows on the key). engine='delta' forces the Delta path and
-    raises if the session can't do it; engine='parquet' forces the
-    fallback.
+    SURVEY.md §3) over plain parquet: a partition-overwrite MERGE that
+    rewrites only the partitions present in `updates` (updates win over
+    existing rows on the key).
     """
-    if engine not in ("auto", "delta", "parquet"):
-        raise ValueError(f"unknown merge engine: {engine!r}")
-    if engine == "delta" and not delta_available(spark):
-        raise RuntimeError(
-            "merge_upsert(engine='delta') requires the delta-spark package "
-            "and spark.sql.extensions=...DeltaSparkSessionExtension"
-        )
-    if engine == "delta" or (engine == "auto" and delta_available(spark)):
-        return merge_upsert_delta(spark, updates, path, key)
     # Two actions consume `updates` (partition discovery + the MERGE
     # write): persist so the upstream pipeline executes once, not twice.
     updates = updates.persist()
@@ -262,33 +160,19 @@ def merge_upsert(
             .filter(F.col("_rn") == 1)
             .drop("_rn", "_is_update")
         )
-        # the conf must land on the session that EXECUTES the write —
-        # under streaming foreachBatch `winners` descends from the
-        # micro-batch session CLONE, whose conf snapshot (not the outer
-        # session's) governs the insert. Setting the outer session and
-        # restoring it turned the second stream's merges into static
-        # overwrites (the r13 code only worked because it leaked
-        # `dynamic` onto the outer session for the next stream to clone).
-        sess = winners.sparkSession
-        prev_mode = sess.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            # one narrow shuffle puts each date partition in exactly one
-            # task -> ONE file per rewritten partition instead of one
-            # per (window task, partition) pair (r14, guide §6: the
-            # window's 32 tasks each wrote into every touched date dir —
-            # ~30x the files, which every later merge re-lists and
-            # re-reads; same one-file-per-partition discipline as the
-            # pq bucket writers, same documented skew valve)
-            winners.repartition(F.col(PARTITION_COLUMN)).write.mode(
-                "overwrite"
-            ).partitionBy(PARTITION_COLUMN).parquet(path)
-        finally:
-            sess.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
+        # one narrow shuffle puts each date partition in exactly one
+        # task -> ONE file per rewritten partition instead of one per
+        # (window task, partition) pair (the window's 32 tasks each
+        # wrote into every touched date dir — ~30x the files, which
+        # every later merge re-lists and re-reads; same
+        # one-file-per-partition discipline as the pq bucket writers,
+        # same documented skew valve). The overwrite mode is a writer
+        # option, so it holds whichever session executes the write.
+        winners.repartition(F.col(PARTITION_COLUMN)).write.mode(
+            "overwrite"
+        ).option("partitionOverwriteMode", "dynamic").partitionBy(
+            PARTITION_COLUMN
+        ).parquet(path)
         return spark.read.parquet(path)
     finally:
         updates.unpersist()
@@ -307,13 +191,9 @@ def overwrite_partitions(
     full-table scan — at 100 TB the difference between O(day) and
     O(table) I/O.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    df.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(partition_col).parquet(path)
 
 
 def compact_partition(
@@ -348,13 +228,10 @@ def compact_partition(
         snap.coalesce(n_files), path, partition_col=partition_col
     )
     part_dir = path.rstrip("/") + f"/{partition_col}={partition_value}"
-    fs, jpath, _ = _hadoop_fs(spark, part_dir)
-    return len(
-        [
-            st
-            for st in fs.listStatus(jpath)
-            if st.getPath().getName().endswith(".parquet")
-        ]
+    return sum(
+        1
+        for e in storage.of(spark, part_dir).list(part_dir)
+        if e.name.endswith(".parquet")
     )
 
 
@@ -499,16 +376,9 @@ def scd2_apply(
         out = to_close.drop("_fp").withColumn(
             "state", F.lit("closed")
         ).unionByName(new_current.withColumn("state", F.lit("current")))
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out.write.mode("overwrite").partitionBy("state", "valid_to").parquet(
-                path
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        out.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("state", "valid_to").parquet(path)
     finally:
         joined.unpersist()
     return spark.read.parquet(path).filter(F.col("state") == "current").drop(

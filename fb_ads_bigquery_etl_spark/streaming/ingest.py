@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession, functions as F
 
+from fb_ads_bigquery_etl_spark import storage
 from fb_ads_bigquery_etl_spark.operators.dedup import dedup_any
 from fb_ads_bigquery_etl_spark.schema import DEDUP_KEY
 from fb_ads_bigquery_etl_spark.sinks import merge_upsert
@@ -90,7 +91,7 @@ def stream_ivf_ingest(
     deterministic b<id>-<bucket>-<seq> name; (5) the marker commits
     last. A crash anywhere replays into steps that are all idempotent,
     so the drained index is file-for-file the index every successful
-    history produces. (os.rename is atomic on a real filesystem; an
+    history produces. (A file rename is atomic on a real filesystem; an
     object store needs its committer here, same caveat as every
     rename-based Spark sink.) The ledger is keyed by the CHECKPOINT'S
     batch ids — discard them together (a fresh checkpoint restarts at
@@ -223,9 +224,9 @@ def _drain_bucket_stream(
     stream over the landing zone (Trigger.AvailableNow), `transform`
     mapping each micro-batch to a bucket-partitioned frame (O(batch)
     work against frozen metadata sidecars), and the stage-and-rename
-    exactly-once publish per batch. Returns micro-batches processed."""
-    import os
-
+    exactly-once publish per batch. Returns micro-batches processed.
+    The ledger, staging dir and index share the index's filesystem
+    (storage.py): the publish renames across them."""
     schema = spark.read.parquet(landing_path).schema  # driver-side peek
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
@@ -236,16 +237,16 @@ def _drain_bucket_stream(
 
     ledger = f"{index_path}_ingested"
     staging = f"{index_path}_staging"
-    os.makedirs(ledger, exist_ok=True)
+    fs = storage.of(spark, index_path)
     batches = {"n": 0}
 
     def _sink(batch_df, batch_id: int) -> None:
         batches["n"] += 1
-        marker = os.path.join(ledger, f"batch-{batch_id}")
-        if os.path.exists(marker):  # replay after a successful commit
+        marker = f"{ledger}/batch-{batch_id}"
+        if fs.exists(marker):  # replay after a successful commit
             return
         pre = _publish_bucket_batch(
-            transform(batch_df), index_path, staging, batch_id
+            fs, transform(batch_df), index_path, staging, batch_id
         )
         # keep the per-file stats sidecar O(batch)-current from the
         # WRITE-TIME stats the publish computed (no re-read of the
@@ -258,8 +259,7 @@ def _drain_bucket_stream(
         )
 
         refresh_ivfpq_manifest(spark, index_path, precomputed=pre)
-        with open(marker, "w") as fh:
-            fh.write("committed")
+        fs.write_bytes(marker, b"committed")
 
     q = (
         stream.writeStream.foreachBatch(_sink)
@@ -272,7 +272,7 @@ def _drain_bucket_stream(
 
 
 def _publish_bucket_batch(
-    frame, index_path: str, staging: str, batch_id: int
+    fs, frame, index_path: str, staging: str, batch_id: int
 ) -> dict[int, tuple[int, int, int]]:
     """Steps 2-4 of the exactly-once protocol (see stream_ivf_ingest):
     stage the bucket-partitioned batch, sweep any previous partial
@@ -281,12 +281,9 @@ def _publish_bucket_batch(
     marker last. Returns the batch's per-bucket (n_rows, min_id,
     max_id) — computed from the frame BEFORE the write so the caller's
     manifest refresh never re-reads the published files."""
-    import os
-    import shutil
-
     from fb_ads_bigquery_etl_spark.operators.pq import _bucket_stats
 
-    stage = os.path.join(staging, f"batch={batch_id}")
+    stage = f"{staging}/batch={batch_id}"
     frame = frame.persist()  # two actions: stats agg + the stage write
     try:
         pre = _bucket_stats(frame)
@@ -305,27 +302,26 @@ def _publish_bucket_batch(
     # partial publish may have landed this id's files in buckets
     # the renumbered batch no longer routes to, and sweeping only
     # staged buckets would leave those as duplicate rows.
-    for bdir in sorted(os.listdir(index_path)):
-        if not bdir.startswith("bucket="):
-            continue
-        dst = os.path.join(index_path, bdir)
-        for old in os.listdir(dst):
-            if old.startswith(prefix):
-                os.remove(os.path.join(dst, old))
-    for bdir in sorted(os.listdir(stage)):
-        if not bdir.startswith("bucket="):
-            continue
-        dst_dir = os.path.join(index_path, bdir)
-        os.makedirs(dst_dir, exist_ok=True)
+    def bucket_dirs(root):
+        return sorted(
+            e.name for e in fs.list(root)
+            if e.is_dir and e.name.startswith("bucket=")
+        )
+
+    for bdir in bucket_dirs(index_path):
+        for old in fs.list(f"{index_path}/{bdir}"):
+            if old.name.startswith(prefix):
+                fs.delete(f"{index_path}/{bdir}/{old.name}")
+    for bdir in bucket_dirs(stage):
         files = sorted(
-            f
-            for f in os.listdir(os.path.join(stage, bdir))
-            if f.endswith(".parquet")
+            e.name
+            for e in fs.list(f"{stage}/{bdir}")
+            if e.name.endswith(".parquet")
         )
         for seq, f in enumerate(files):
-            os.rename(
-                os.path.join(stage, bdir, f),
-                os.path.join(dst_dir, f"{prefix}{seq}.parquet"),
+            fs.rename(
+                f"{stage}/{bdir}/{f}",
+                f"{index_path}/{bdir}/{prefix}{seq}.parquet",
             )
-    shutil.rmtree(stage, ignore_errors=True)
+    fs.delete(stage)
     return pre

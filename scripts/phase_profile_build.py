@@ -16,12 +16,12 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+    from fb_ads_bigquery_etl_spark import storage
     from fb_ads_bigquery_etl_spark.session import get_spark
     from fb_ads_bigquery_etl_spark.operators import similarity
     from fb_ads_bigquery_etl_spark.operators.pq import (
         _bucket_stats,
         _residuals,
-        _split_fs,
         _split_paths,
         encode_ints,
         refresh_ivfpq_manifest,
@@ -47,10 +47,10 @@ def main() -> None:
         tmp = tempfile.mkdtemp(prefix="_phase_build_")
         path = os.path.join(tmp, "index")
         try:
-            fs, P = _split_fs(spark, path)
+            fs = storage.of(spark, path)
             staged_p, scents_p, commit_p = _split_paths(path)
             timed("leftover-split fs checks", lambda: [
-                fs.exists(P(x))
+                fs.exists(x)
                 for x in (staged_p, scents_p, commit_p, f"{commit_p}_tmp")
             ])
             cents, resid = timed(

@@ -500,13 +500,10 @@ def test_scd2_apply_tracks_history(spark, tmp_path):
     assert spark.read.parquet(path).filter("state = 'closed'").count() == 1
 
 
-def test_merge_upsert_engine_dispatch(spark, tmp_path):
-    """This container has no delta-spark: the probe must say so, 'auto'
-    must take the parquet fallback (idempotent, updates-win), and
-    engine='delta' must fail loudly rather than silently degrade."""
+def test_merge_upsert_parquet_idempotent_updates_win(spark, tmp_path):
+    """The parquet partition-overwrite MERGE is idempotent and updates
+    win over existing rows on the key."""
     from fb_ads_bigquery_etl_spark import sinks
-
-    assert sinks.delta_available(spark) is False
 
     df = spark.createDataFrame(
         [("c1", "a1", "2026-01-10", "facebook", 1.0)],
@@ -514,16 +511,11 @@ def test_merge_upsert_engine_dispatch(spark, tmp_path):
         "publisher_platform string, spend double",
     )
     path = str(tmp_path / "merge_tbl")
-    sinks.merge_upsert(spark, df, path)  # auto -> parquet fallback
+    sinks.merge_upsert(spark, df, path)
     updated = df.withColumn("spend", F.lit(2.0))
     out = sinks.merge_upsert(spark, updated, path)
     rows = out.collect()
     assert len(rows) == 1 and rows[0]["spend"] == 2.0  # updates win
-
-    with pytest.raises(RuntimeError, match="delta"):
-        sinks.merge_upsert(spark, df, path, engine="delta")
-    with pytest.raises(ValueError):
-        sinks.merge_upsert(spark, df, path, engine="iceberg")
 
 
 def test_run_streaming_drains_and_is_exactly_once(spark, tmp_path):
